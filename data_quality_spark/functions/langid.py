@@ -7,10 +7,10 @@ per-language seed vocabularies (public common-word lists in
 ``textstats.STOPWORDS`` extended below) — identical bytes on driver, executor
 and oracle, so scores match bit-for-bit.
 
-Engine path: vectorized pandas UDF (Series→Series), model built lazily once
-per executor process at module import — the "broadcast model" pattern from
-the north_star (module-level state ships with --py-files; no per-row Python
-UDF). Oracle path: the SAME ``predict_batch`` numpy function.
+Engine path: ``predict_batch`` inside the fused model UDF (functions.models),
+profiles built lazily once per executor process — the "broadcast model"
+pattern from the north_star (module-level state ships with --py-files; no
+per-row Python UDF). Oracle path: the SAME ``predict_batch`` numpy function.
 
 Reference ancestor: ``ValuesInList`` on a lang column
 (/root/reference/data_quality/src/checks/values_in_list.py:24-33) — upgraded
@@ -59,14 +59,6 @@ _NGRAM_RANGE = (2, 3)
 _ALPHA = 0.5  # add-k smoothing
 
 
-def _hash_ngram(s: str) -> int:
-    # FNV-1a 32-bit — tiny, deterministic, identical everywhere.
-    h = 0x811C9DC5
-    for ch in s.encode("utf-8"):
-        h = ((h ^ ch) * 0x01000193) & 0xFFFFFFFF
-    return h % N_BUCKETS
-
-
 _FNV_OFFSET = np.uint64(0x811C9DC5)
 _FNV_PRIME = np.uint64(0x01000193)
 _MASK32 = np.uint64(0xFFFFFFFF)
@@ -78,12 +70,12 @@ def _fnv_step(h: np.ndarray, b: np.ndarray) -> np.ndarray:
 
 def _ngram_buckets(text: str) -> np.ndarray:
     """Bucket ids of all char 2- and 3-grams of ' text.lower() ' — the
-    vectorized twin of scalar FNV-1a over each gram's UTF-8 bytes.
+    FNV-1a 32-bit over each gram's UTF-8 bytes (tiny, deterministic,
+    identical everywhere), vectorized over the whole text.
 
     Grams are taken over the UTF-8 BYTE stream, which for multibyte chars
     differs from char-grams — but it is applied identically at train time
-    (``_hash_ngram`` hashes encoded bytes too, and training words hash the
-    full word's bytes) and in every consumer, so the model is self-consistent.
+    and in every consumer, so the model is self-consistent.
     """
     t = f" {text.lower()} "
     b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8).astype(np.uint64)
@@ -107,7 +99,6 @@ def _build_profiles() -> np.ndarray:
 
 
 _PROFILES: np.ndarray | None = None
-_PRIOR = None
 
 
 def profiles() -> np.ndarray:
@@ -144,17 +135,3 @@ def predict_batch(texts: pd.Series) -> pd.DataFrame:
         margins.append(m)
     return pd.DataFrame({"lang_pred": langs, "lang_margin": margins})
 
-
-def spark_udf():
-    """Series→Series pandas UDF returning struct(lang_pred, lang_margin).
-
-    Arrow-batched; profiles built once per executor interpreter (module
-    global), the SNIPPETS.md [1]/[3] pattern.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("lang_pred string, lang_margin double")
-    def langid_udf(texts: pd.Series) -> pd.DataFrame:
-        return predict_batch(texts)
-
-    return langid_udf

@@ -8,7 +8,7 @@ low perplexity; gibberish (random char runs) scores high — exactly the
 separation the quality filter needs.
 
 Same dual-path contract as langid: ``ppl_batch`` is shared verbatim by the
-pandas UDF (engine) and the oracle, so scores match bit-for-bit.
+fused model UDF (engine) and the oracle, so scores match bit-for-bit.
 
 Plugs into the rule engine like a ColumnBetweenValues threshold
 (/root/reference/data_quality/src/checks/column_between_values.py:38-51).
@@ -32,10 +32,6 @@ _LAMBDA3, _LAMBDA2, _LAMBDA1 = 0.6, 0.3, 0.1
 _MODEL = None
 
 
-def _norm_char(ch: str) -> int:
-    return _C2I.get(ch, _C2I[" "])
-
-
 # vectorized codepoint→id lookup table (codepoints above the table map to ' ')
 _MAX_CP = max(ord(c) for c in _CHARS) + 1
 _CP_TABLE = np.full(_MAX_CP, _C2I[" "], dtype=np.int64)
@@ -44,8 +40,8 @@ for _c, _i in _C2I.items():
 
 
 def _char_ids(text: str) -> np.ndarray:
-    """Vectorized twin of [_norm_char(c) for c in text]: decode to
-    codepoints via utf-32 and table-lookup (unknown → space id)."""
+    """Char ids of text: decode to codepoints via utf-32 and table-lookup
+    (characters outside _CHARS → the space id)."""
     cps = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
     ids = np.where(cps < _MAX_CP, _CP_TABLE[np.minimum(cps, _MAX_CP - 1)], _C2I[" "])
     return ids
@@ -56,7 +52,7 @@ def _train():
     bi = np.full((V, V), _ALPHA)
     tri = np.full((V, V, V), _ALPHA)
     corpus = " ".join(" ".join(ws) for _, ws in sorted(SEED_WORDS.items()))
-    ids = [_norm_char(c) for c in corpus.lower()]
+    ids = _char_ids(corpus.lower()).tolist()
     for i, c in enumerate(ids):
         uni[c] += 1
         if i >= 1:
@@ -95,12 +91,3 @@ def ppl_one(text: str, max_chars: int = 2000) -> float:
 def ppl_batch(texts: pd.Series) -> pd.Series:
     return texts.fillna("").map(ppl_one).astype("float64")
 
-
-def spark_udf():
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def ppl_udf(texts: pd.Series) -> pd.Series:
-        return ppl_batch(texts)
-
-    return ppl_udf

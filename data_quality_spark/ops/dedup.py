@@ -62,22 +62,6 @@ def tokens_col(text: Column) -> Column:
     return F.filter(F.split(text, r"\s+"), lambda x: x != "")
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams joined by single spaces (the MinHash item set)."""
-    toks = tokens_col(text)
-    k = F.size(toks)
-    starts = F.sequence(F.lit(1), k - (n - 1))  # 1-based, element_at is 1-based
-    grams = F.transform(
-        starts,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + F.lit(j)) for j in range(n)]
-        ),
-    )
-    return F.when(k >= n, F.array_distinct(grams)).otherwise(
-        F.expr("CAST(array() AS array<string>)")
-    )
-
-
 # ---------------------------------------------------------------------------
 # 1 — exact dedup
 # ---------------------------------------------------------------------------
@@ -502,31 +486,11 @@ def remove_seen_paragraphs(
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(shingles: Column, k: int = MINHASH_K) -> Column:
-    """Array of k minhash values. Hash i = 60 bits of md5(shingle||'#⌊i/2⌋'),
-    taking hex digits [1,15] for even i and [16,30] for odd i — one md5 call
-    feeds two hash functions, so k hashes cost ⌈k/2⌉ md5 passes over the
-    shingle set. Empty shingle set → nulls (callers must filter)."""
-    def hash_with(salt: str, start: int):
-        # closure keeps the lambda unary — a binary lambda would make
-        # F.transform pass the array INDEX as the second argument
-        return lambda s: portable_hash64(s, salt, start)
-
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, hash_with(f"#{i // 2}", 1 + 15 * (i % 2)))
-            )
-            for i in range(k)
-        ]
-    )
-
-
-# -- python twins (bit-identical: same \s+ tokenization with ASCII classes
-#    like Java/RE2, same md5 hex-slice hashes) — the SCALE path. Catalyst
-#    higher-order functions are interpreted (CodegenFallback, no CSE), which
-#    makes the native signature expressions ~10× slower than a vectorized
-#    Arrow batch; values are identical either way, pinned by tests.
+# -- python shingles and signatures — the SCALE path: Catalyst
+#    higher-order functions are interpreted (CodegenFallback, no CSE), so
+#    the same signatures as native expressions run ~10× slower than a
+#    vectorized Arrow batch. Tokenization is \s+ with ASCII classes, like
+#    Java/RE2, so the SQL oracles split identically.
 
 _WS = re.compile(r"\s+", re.ASCII)
 _H64_MAX = (1 << 60) - 1
@@ -627,21 +591,9 @@ def _simhash_udf(n: int, bits: int):
 
 
 def with_minhash(
-    df: DataFrame,
-    text_col: str,
-    n: int = 3,
-    k: int = MINHASH_K,
-    strategy: str = "udf",
+    df: DataFrame, text_col: str, n: int = 3, k: int = MINHASH_K
 ) -> DataFrame:
-    """strategy='udf' (default): Arrow-batched python signatures — the scale
-    path. strategy='native': pure Catalyst expressions — identical values
-    (tests pin equality), zero Python; use when python workers are
-    undesirable."""
-    if strategy == "native":
-        sh = word_shingles(F.col(text_col), n)
-        return df.withColumn("shingles", sh).withColumn(
-            "minhash", minhash_signature(F.col("shingles"), k)
-        )
+    """df + (shingles, minhash) from Arrow-batched python signatures."""
     from data_quality_spark.ops.util import spread_narrow
 
     df = spread_narrow(df)
@@ -670,39 +622,12 @@ def _band_key(mh: Column, band: int, rows: int = LSH_ROWS) -> Column:
     return portable_hash64(joined)
 
 
-def jaccard(a: Column, b: Column) -> Column:
-    inter = F.size(F.array_intersect(a, b))
-    return F.when(
-        (F.size(a) + F.size(b) - inter) > 0,
-        inter.cast("double") / (F.size(a) + F.size(b) - inter),
-    ).otherwise(F.lit(0.0))
-
-
-def _jaccard_udf():
-    """Arrow-batched twin of ``jaccard`` for pair verification: python set
-    intersection is ~10× faster per pair than the interpreted
-    array_intersect expression, and int-ratio division is IEEE-identical."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def jac(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(a, b):
-            sx, sy = set(x), set(y)
-            union = len(sx) + len(sy) - len(sx & sy)
-            out.append(len(sx & sy) / union if union > 0 else 0.0)
-        return pd.Series(out, dtype="float64")
-
-    return jac
-
-
 def _text_jaccard_udf(n: int):
     """Exact Jaccard over word n-gram sets computed FROM RAW TEXT inside the
     verify stage. Lets candidate generation stay id-only: the verification
     join pulls (id → text) — already sitting in the source table — instead
-    of shuffling multi-KB shingle arrays through the band exchange. Same
-    shingling/ratio as the shingle-array twin (pinned by the shared
-    py_shingles), so values are bit-identical."""
+    of shuffling multi-KB shingle arrays through the band exchange. The
+    shingles are the signatures' own (py_shingles)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -764,7 +689,6 @@ def minhash_lsh_pairs(
     k: int = MINHASH_K,
     bands: int = LSH_BANDS,
     rows: int = LSH_ROWS,
-    broadcast_candidates: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard ≥ threshold).
 
@@ -775,13 +699,12 @@ def minhash_lsh_pairs(
     inside the Arrow verify stage]. The band exchange payload is one string
     key + the id.
 
-    broadcast_candidates: None (default) adds NO broadcast hint — AQE
-    converts the verify joins to broadcast at runtime exactly when the
-    candidate set measures small. The pair count is data-dependent and
-    unbounded (a high-duplication corpus yields O(corpus) pairs, up to
-    ~C(MAX_BUCKET,2) per bucket), and a forced hint would bypass
-    autoBroadcastJoinThreshold and OOM the driver at the 100 TB design
-    point. Pass True only when the caller KNOWS the pair set is tiny."""
+    The verify joins carry NO broadcast hint — AQE converts them to
+    broadcast at runtime exactly when the candidate set measures small.
+    The pair count is data-dependent and unbounded (a high-duplication
+    corpus yields O(corpus) pairs, up to ~C(MAX_BUCKET,2) per bucket), and
+    a forced hint would bypass autoBroadcastJoinThreshold and OOM the
+    driver at the 100 TB design point."""
     base = (
         with_minhash(df.select(id_col, text_col), text_col, n, k)
         .where(F.size("shingles") > 0)
@@ -804,8 +727,6 @@ def minhash_lsh_pairs(
     txt = df.select(id_col, text_col)
     ta = txt.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("__ta"))
     tb = txt.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("__tb"))
-    if broadcast_candidates:
-        cand = F.broadcast(cand)
     paired = ta.join(cand, "id_a").join(tb, "id_b")
     return paired.select(
         "id_a",
@@ -1061,38 +982,6 @@ def dedup_minhash_incremental(
 # ---------------------------------------------------------------------------
 # 3 — SimHash
 # ---------------------------------------------------------------------------
-
-
-def simhash_from_hashes(hs: Column, total: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash given a precomputed hash array: bit j set iff
-    Σ_s (±1 by bit j of hash(s)) > 0. The hash array MUST be materialized in
-    its own projection by the caller: higher-order functions are interpreted
-    (no codegen CSE), so an inline transform here would be re-evaluated once
-    per bit — bits× the md5 work."""
-
-    def bit_sum(j: int) -> Column:
-        # ones_j − zeros_j = 2*ones_j − n
-        ones = F.aggregate(
-            hs,
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + F.shiftright(x, j).bitwiseAND(F.lit(1).cast("long")),
-        )
-        return 2 * ones - total
-
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        out = out + F.when(bit_sum(j) > 0, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return out
-
-
-def simhash(shingles: Column, bits: int = SIMHASH_BITS) -> Column:
-    """Inline-convenience variant (tests / one-off exprs). For data-path use
-    prefer materializing the hash array first — see simhash_from_hashes."""
-    return simhash_from_hashes(
-        F.transform(shingles, lambda s: portable_hash64(s)), F.size(shingles), bits
-    )
 
 
 def simhash_pairs(

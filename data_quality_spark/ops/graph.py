@@ -462,9 +462,13 @@ CC_MAX_ROUNDS = 50           # safety cap; converges in O(log n) rounds
 def _cc_checksum(e: DataFrame):
     """(count, Σ hash64(a||sep||b)) — an order-independent bigint edge-set
     fingerprint (one tiny 2-column agg per round) used as the convergence
-    test. 60-bit terms keep the sum far from bigint overflow below ~10^9
-    edges; beyond that compare counts first (done) so collisions of the
-    sum alone never mask a change."""
+    test. The sum WRAPS: 60-bit terms (mean 2^59) pass 2^63 after ~16
+    edges, and the checksum is the sum mod 2^64 on purpose — wrap-around
+    addition is still order-independent and deterministic, so equal edge
+    sets give equal checksums under any partitioning. This relies on ANSI
+    mode being OFF (the session factory's setting): with ANSI on, the
+    overflowing sum raises ArithmeticException instead of wrapping. Counts
+    are compared too, so a sum collision alone never masks a change."""
     from data_quality_spark.ops.hashing import portable_hash64
 
     return e.agg(
@@ -1139,11 +1143,10 @@ def hits(
     # frames are bare (host, host) / (host) rows — the standard iterative-
     # graph materialization (GraphX does the same), executor-storage-sized
     # by the HOST graph, not the corpus.
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # edge hygiene as edges_from_pages: NULL/'' hosts and self-loops are
+    # dropped (a self-loop would feed a host's hub score into its own
+    # authority; '' is host_of's malformed-url value, not a host)
+    e = edges_from_pages(edges, src_col, dst_col).localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("src").alias("host"))
         .unionByName(e.select(F.col("dst").alias("host")))
@@ -1238,7 +1241,9 @@ def sql_hits(edges_sql: str, iters: int = HITS_ITERS) -> str:
     with localCheckpoint).
     edges_sql must yield (src, dst) with the same rows as the Spark side."""
     ctes = [
-        f"e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ({edges_sql}))",
+        f"e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ({edges_sql})"
+        " WHERE src IS NOT NULL AND dst IS NOT NULL"
+        " AND src <> '' AND dst <> '' AND src <> dst)",
         "nodes AS MATERIALIZED"
         " (SELECT src AS host FROM e UNION SELECT dst FROM e)",
         f"h0 AS MATERIALIZED"

@@ -314,9 +314,7 @@ def _fake_decode(payload: bytes, fmt: str) -> tuple[int, int]:
     return 64 + d[0] % 192, 64 + d[1] % 192
 
 
-def decode_media_meta(
-    df: DataFrame, real_decode: bool = False, batch_hint: int | None = None
-) -> DataFrame:
+def decode_media_meta(df: DataFrame, real_decode: bool = False) -> DataFrame:
     """mapInPandas stage: binary payload → typed metadata row per media.
 
     ``real_decode=True`` parses genuine container headers (PNG IHDR, JPEG
@@ -366,37 +364,13 @@ def sample_frames(
     df: DataFrame,
     frame_chars: int = FRAME_CHARS,
     every_n: int = 2,
-    strategy: str = "udf",
 ) -> DataFrame:
     """Frame-sampling plumbing: ONE media row → N sampled frame rows
     (media_id, frame_idx, n_chars, frame_md5) — every `every_n`-th
     fixed-size window of the decoded payload. This is the 1→N mapInPandas
     contract a real video frame extractor uses (payload → decoded frames →
     per-frame rows); the codec is the stub (windows of the decoded text
-    stand in for decoded frames — the sandbox ships no video libs).
-
-    strategy='udf' (default): Arrow mapInPandas — the production shape.
-    strategy='native': pure Catalyst sequence+explode twin (pinned equal)."""
-    if strategy == "native":
-        s = F.decode(F.col("payload"), "UTF-8")
-        n_frames = F.ceil(F.length(s) / F.lit(frame_chars)).cast("int")
-        idxs = F.when(
-            F.length(s) > 0,
-            F.sequence(F.lit(0), n_frames - 1, F.lit(every_n)),
-        ).otherwise(F.expr("CAST(array() AS array<int>)"))
-        ex = df.select(
-            "media_id", s.alias("__s"), F.explode(idxs).alias("frame_idx")
-        )
-        frame = F.substring(
-            F.col("__s"), F.col("frame_idx") * frame_chars + 1, frame_chars
-        )
-        return ex.select(
-            "media_id",
-            "frame_idx",
-            F.length(frame).alias("n_chars"),
-            F.md5(frame).alias("frame_md5"),
-        )
-
+    stand in for decoded frames — the sandbox ships no video libs)."""
     out_schema = StructType(
         [
             StructField("media_id", LongType()),
@@ -426,9 +400,7 @@ def sample_frames(
     return df.mapInPandas(batches, out_schema)
 
 
-def resize_media(
-    df: DataFrame, target_w: int, target_h: int, strategy: str = "udf"
-) -> DataFrame:
+def resize_media(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
     """Resize plumbing: payload → (media_id, payload, width, height, format)
     with the payload "resampled" to the target size. The resample is the
     stub (deterministic truncate-to-budget of the decoded payload, budget =
@@ -436,16 +408,6 @@ def resize_media(
     Pillow/ffmpeg, re-encodes inside the same batch loop); the schema,
     batching, and map-only plan shape are the production contract."""
     budget = max(1, (target_w * target_h) // 16)
-    if strategy == "native":
-        s = F.decode(F.col("payload"), "UTF-8")
-        return df.select(
-            "media_id",
-            F.encode(F.substring(s, 1, budget), "UTF-8").alias("payload"),
-            F.lit(target_w).alias("width"),
-            F.lit(target_h).alias("height"),
-            "format",
-        )
-
     out_schema = StructType(
         [
             StructField("media_id", LongType()),
@@ -461,7 +423,7 @@ def resize_media(
             out = []
             for p in pdf["payload"]:
                 if p is None:
-                    out.append(None)  # NULL in → NULL out, like the native twin
+                    out.append(None)  # NULL in → NULL out
                 else:
                     s = bytes(p).decode("utf-8")
                     out.append(s[:budget].encode("utf-8"))

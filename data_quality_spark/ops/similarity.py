@@ -130,10 +130,10 @@ def _pair_dot_udf():
                 vals.append(None)
                 continue
             if len(u) != len(v):
-                # mirror the native zip_with path: the shorter side pads
-                # with NULL → dot NULL → pair filtered; a silent zip()
-                # truncation here would emit a number the native strategy
-                # rejects, diverging the two pair sets on ragged input
+                # mirror the zip_with fold (and the SQL oracle): the
+                # shorter side pads with NULL → dot NULL → pair filtered; a
+                # silent zip() truncation here would emit a number the
+                # oracle rejects, diverging the pair sets on ragged input
                 vals.append(None)
                 continue
             acc = 0.0
@@ -151,22 +151,16 @@ def cosine_pairs(
     vec_col: str,
     block_cols: list[str],
     threshold: float,
-    strategy: str = "udf",
 ) -> DataFrame:
     """All pairs within a block with cosine ≥ threshold (id_a < id_b).
 
     Norms are computed ONCE per input row before the self-join (N folds,
     not Σ|block|² per-pair recomputations). The per-pair dot product runs
-    'udf' (Arrow, scale path — bit-parity argument at _pair_dot_udf) or
-    'native' (pure Catalyst fold, zero Python); values identical
-    (test-pinned)."""
+    in an Arrow UDF (bit-parity argument at _pair_dot_udf)."""
     v = _as_double(F.col(vec_col))
     base = df.select(id_col, *block_cols, v.alias("v"), norm(v).alias("nv"))
     l, r = base.alias("l"), base.alias("r")
-    if strategy == "native":
-        dot_col = dot(F.col("l.v"), F.col("r.v"))
-    else:
-        dot_col = _pair_dot_udf()(F.col("l.v"), F.col("r.v"))
+    dot_col = _pair_dot_udf()(F.col("l.v"), F.col("r.v"))
     na, nb = F.col("l.nv"), F.col("r.nv")
     cos_col = F.when((na > 0) & (nb > 0), dot_col / (na * nb)).otherwise(
         F.lit(0.0)
@@ -387,35 +381,16 @@ def ivf_topk(
 # ---------------------------------------------------------------------------
 
 
-def _assign_cell_expr(vec: Column, centroids: list[list[float]]) -> Column:
-    """argmax_cell cosine(vec, centroid), ties → lowest cell id. Expressed
-    as array_max over (cos, -cell) structs (struct comparison is
-    field-lexicographic, so equal cos falls to the HIGHEST -cell = lowest
-    cell)."""
-    # 6dp-rounded cosine before the argmax: raw float sums differ by an ulp
-    # between engines (sequential fold vs pairwise list_sum), which could
-    # flip near-tied assignments; after rounding, ties resolve by cell id
-    # identically everywhere (same quantization the LSH sign bits use)
-    cands = F.array(
-        *[
-            F.struct(
-                F.round(cosine(vec, _lit_vec(c)), 6).alias("c"),
-                F.lit(-i).alias("nc"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    return -F.array_max(cands)["nc"]
-
-
 def _assign_cells_udf(centroids: list[list[float]]):
-    """Arrow-batched twin of `_assign_cell_expr`: one batched dot-product
-    accumulation per Arrow batch instead of k interpreted cosine folds per
-    row (the fold path is CodegenFallback — measured ~10× slower). Bit
-    parity with the native expression: dims accumulate sequentially (same
-    float addition order as the fold), the cosine is rounded with the same
-    shortest-repr HALF_UP rule F.round applies, ties take the lowest cell,
-    and NULL/zero-norm vectors score 0.0 for every cell → cell 0."""
+    """argmax_cell cosine(vec, centroid) as an Arrow UDF: one batched
+    dot-product accumulation per Arrow batch instead of k interpreted cosine
+    folds per row (a fold expression is CodegenFallback — measured ~10×
+    slower). The contract the SQL oracle shares: dims accumulate
+    sequentially, the cosine is rounded to 6dp with the shortest-repr
+    HALF_UP rule F.round applies (raw sums differ by an ulp between
+    engines; after rounding, near-ties resolve identically), ties take the
+    lowest cell, and NULL/zero-norm vectors score 0.0 for every cell →
+    cell 0."""
     from pyspark.sql.functions import pandas_udf
 
     C = np.asarray(centroids, dtype=np.float64)
@@ -473,12 +448,8 @@ def _assign_rows(V: np.ndarray, C: np.ndarray) -> list:
     return out
 
 
-def assign_cells(vec: Column, centroids: list[list[float]],
-                 strategy: str = "udf") -> Column:
-    """Cell-assignment column: 'udf' (Arrow matmul, scale path) or 'native'
-    (pure Catalyst fold — zero Python). Values identical (pinned by test)."""
-    if strategy == "native":
-        return _assign_cell_expr(vec, centroids)
+def assign_cells(vec: Column, centroids: list[list[float]]) -> Column:
+    """Cell-assignment column (see _assign_cells_udf for the contract)."""
     return _assign_cells_udf(centroids)(vec)
 
 
@@ -489,12 +460,11 @@ def train_kmeans_cells(
     k: int = 8,
     n_iter: int = 3,
     dim: int = EMB_DIM,
-    strategy: str = "udf",
 ) -> list[list[float]]:
     """Deterministic Lloyd's k-means over the embedding column — the TRAINED
     coarse quantizer for IVF search (replaces using a label column as
     cells). Init = the vectors of the k smallest ids (no RNG); each
-    iteration assigns by an in-plan cosine-argmax expression (one scan) and
+    iteration assigns by the assign_cells cosine argmax (one scan) and
     recomputes means as 64 codegen'd avg aggregates rounded to 6dp (pins
     partial-sum combine order, the same trick label_centroids uses). Only
     the k×dim centroid table ever reaches the driver. At 10^12 vectors,
@@ -516,13 +486,12 @@ def train_kmeans_cells(
     if len(seeds) < k:
         raise ValueError(f"need >= {k} non-NULL vectors to seed {k} cells")
     cents = [[float(x) for x in r["__v"]] for r in seeds]
-    if strategy == "udf":
-        from data_quality_spark.ops.util import spread_narrow
+    from data_quality_spark.ops.util import spread_narrow
 
-        df = spread_narrow(df)
+    df = spread_narrow(df)
     for _ in range(n_iter):
         assigned = df.select(
-            assign_cells(v, cents, strategy).alias("__cell"), v.alias("__v")
+            assign_cells(v, cents).alias("__cell"), v.alias("__v")
         )
         aggs = [
             F.round(F.avg(F.element_at(F.col("__v"), i + 1)), 6).alias(f"c{i}")
@@ -669,8 +638,6 @@ def cosine_lsh_pairs(
     vec_col: str,
     threshold: float = 0.95,
     tables: list[list[list[float]]] | None = None,
-    strategy: str = "udf",
-    broadcast_candidates: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by random-hyperplane LSH — the no-blocking-key
     scale path (cosine_pairs needs caller-provided blocks). Candidates =
@@ -678,28 +645,19 @@ def cosine_lsh_pairs(
     verified exactly (cosine ≥ threshold). Same candidate topology as the
     MinHash banding: bucket aggregation, no self-join, bucket-size cap —
     and id-only: the band exchange carries (band_key, id), never the
-    vector; verification joins the vectors back. broadcast_candidates as in
-    ops.dedup.minhash_lsh_pairs: default None adds NO hint — the pair count
-    is data-dependent and unbounded, so AQE decides broadcast at runtime
-    from the measured size instead of a forced hint that could OOM the
-    driver on a high-duplication corpus."""
+    vector; verification joins the vectors back. As in
+    ops.dedup.minhash_lsh_pairs the verify joins carry NO broadcast hint:
+    the pair count is data-dependent and unbounded, so AQE decides
+    broadcast at runtime from the measured size instead of a forced hint
+    that could OOM the driver on a high-duplication corpus."""
     from data_quality_spark.ops.dedup import _pairs_from_buckets
 
     tables = tables if tables is not None else PAIR_HYPERPLANES
     v = _as_double(F.col(vec_col))
-    if strategy == "udf":
-        from data_quality_spark.ops.util import spread_narrow
+    from data_quality_spark.ops.util import spread_narrow
 
-        df = spread_narrow(df)
-        keys = _pair_band_keys_udf(tables)(v)
-    else:  # 'native': pure Catalyst fold expressions, zero Python
-        keys = F.array(
-            *[
-                F.lit(t << 32).cast("long")
-                + lsh_signature(v, planes).cast("long")
-                for t, planes in enumerate(tables)
-            ]
-        )
+    df = spread_narrow(df)
+    keys = _pair_band_keys_udf(tables)(v)
     banded = df.select(
         F.col(id_col).alias("doc_id"), F.explode(keys).alias("band_key")
     )
@@ -714,8 +672,6 @@ def cosine_lsh_pairs(
     vecs = df.select(F.col(id_col), v.alias("__v"))
     va = vecs.select(F.col(id_col).alias("id_a"), F.col("__v").alias("__va"))
     vb = vecs.select(F.col(id_col).alias("id_b"), F.col("__v").alias("__vb"))
-    if broadcast_candidates:
-        cand = F.broadcast(cand)
     paired = va.join(cand, "id_a").join(vb, "id_b")
     return paired.select(
         "id_a",

@@ -528,28 +528,13 @@ def decontaminate(
 # ---------------------------------------------------------------------------
 
 
-def fingerprint(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, strategy: str = "udf"
-) -> DataFrame:
+def fingerprint(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """(id, fp_min, fp_max, n_shingles): min/max 60-bit hash over word
     n-gram shingles — the two winnowing anchors. Equal fp_min across docs ⇒
     shared rare shingle ⇒ near-dup candidate (cheap pre-cluster key).
 
-    strategy='udf' (default): Arrow-batched hashlib path — identical values,
-    ~10× faster than the interpreted higher-order-function expressions.
-    strategy='native': pure Catalyst, zero Python."""
-    if strategy == "native":
-        from data_quality_spark.ops.dedup import word_shingles
-
-        sh = word_shingles(F.col(text_col), n)
-        hs = F.transform(sh, lambda s: portable_hash64(s))
-        return df.select(
-            F.col(id_col),
-            F.array_min(hs).alias("fp_min"),
-            F.array_max(hs).alias("fp_max"),
-            F.size(sh).alias("n_shingles"),
-        ).where(F.col("n_shingles") > 0)
-
+    Arrow-batched hashlib path: ~10× faster than the same hashes computed
+    by interpreted higher-order-function expressions."""
     from pyspark.sql.functions import pandas_udf
 
     from data_quality_spark.ops.dedup import py_shingles
@@ -582,8 +567,8 @@ def fingerprint(
 # Hard cap on the boilerplate-line set collected to the driver for the
 # map-only rewrite pass. By construction each boilerplate line accounts for
 # >= min_docs documents, so |set| <= total_lines / min_docs — small for any
-# sane threshold; the cap turns a pathological corpus into a loud error
-# (with the shuffle-join strategy as the escape hatch) instead of driver OOM.
+# sane threshold; a pathological corpus above the cap takes the shuffle
+# anti-join path instead of risking driver OOM.
 BOILER_MAX_BROADCAST = 200_000
 
 
@@ -640,25 +625,21 @@ def remove_boilerplate(
     min_docs: int,
     out_col: str = "text_clean",
     min_line_chars: int = 1,
-    strategy: str = "broadcast",
-    max_broadcast: int = BOILER_MAX_BROADCAST,
 ) -> DataFrame:
     """Strip corpus-level boilerplate lines (see boilerplate_lines) from
     every document: df + out_col with the offending lines removed, remaining
     lines in original order. NULL text -> NULL; a doc whose every line is
     boilerplate -> ''.
 
-    strategy='broadcast' (default): the detected line set is collected
-    (hard-capped at max_broadcast, loud error beyond) and shipped once per
-    executor; the rewrite is a map-only Arrow UDF with O(1) set membership
-    per line — the full corpus never shuffles.
-    strategy='join': no driver collection — posexplode + broadcast anti-join
-    against the detected set + ordered re-assembly, then an id-keyed join
-    back. Costs one full-corpus shuffle (the re-group) — the escape hatch
-    for a boilerplate set too large to broadcast."""
+    The detected line set is collected (at most BOILER_MAX_BROADCAST lines)
+    and shipped once per executor; the rewrite is a map-only Arrow UDF with
+    O(1) set membership per line — the full corpus never shuffles. A set
+    over the cap is not shipped: the rewrite then runs as posexplode +
+    anti-join against the detected set + ordered re-assembly and an
+    id-keyed join back, costing one full-corpus shuffle (the re-group)."""
     bl = boilerplate_lines(df, text_col, min_docs, min_line_chars)
-
-    if strategy == "join":
+    rows = bl.select("line").limit(BOILER_MAX_BROADCAST + 1).collect()
+    if len(rows) > BOILER_MAX_BROADCAST:
         lines = (
             df.where(F.col(text_col).isNotNull())
             .select(
@@ -667,11 +648,7 @@ def remove_boilerplate(
                     "__pos", "__line"
                 ),
             )
-            .join(
-                F.broadcast(bl.select(F.col("line").alias("__line"))),
-                "__line",
-                "left_anti",
-            )
+            .join(bl.select(F.col("line").alias("__line")), "__line", "left_anti")
         )
         rebuilt = lines.groupBy(id_col).agg(
             F.array_join(
@@ -689,15 +666,6 @@ def remove_boilerplate(
             ),
         )
 
-    if strategy != "broadcast":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    rows = bl.select("line").limit(max_broadcast + 1).collect()
-    if len(rows) > max_broadcast:
-        raise ValueError(
-            f"boilerplate set exceeds max_broadcast={max_broadcast}; "
-            "use strategy='join' or raise min_docs"
-        )
     blset = frozenset(r["line"] for r in rows)
     b = df.sparkSession.sparkContext.broadcast(blset)
 
@@ -2395,9 +2363,10 @@ def weighted_sample(
     Same determinism contract as sample_stratified: the priority is a
     pure function of the row id — stable across runs, partitionings, and
     engines (md5-portable, oracle-reproducible), and different salts give
-    independent samples. Weights must be integers ≥ 1: w = 0 would
-    floor-divide to NULL in Spark but ERROR in DuckDB (engine-divergent),
-    so it's validated eagerly (one tiny agg) instead.
+    independent samples. Weights must be non-NULL integers ≥ 1: w = 0 would
+    floor-divide to NULL in Spark but ERROR in DuckDB, and a NULL priority
+    sorts first in Spark but last in DuckDB (engine-divergent either way),
+    so both are validated eagerly (one tiny agg) instead.
 
     Plan shape: map-only priority projection + TakeOrderedAndProject on
     (prio, id) — per-partition top-k heaps merged on the driver, never a
@@ -2408,7 +2377,18 @@ def weighted_sample(
     """
     from data_quality_spark.ops.hashing import portable_hash64
 
-    wrow = df.agg(F.min(F.col(weight_col)).alias("mn")).first()
+    # F.min skips NULLs, so NULL weights are counted in the same agg: a
+    # NULL weight gives a NULL priority, which Spark sorts first and
+    # DuckDB last
+    wrow = df.agg(
+        F.min(F.col(weight_col)).alias("mn"),
+        F.count_if(F.col(weight_col).isNull()).alias("n_null"),
+    ).first()
+    if wrow["n_null"]:
+        raise ValueError(
+            f"weighted_sample(): {wrow['n_null']} row(s) have a NULL "
+            f"{weight_col}; fill or filter them out first"
+        )
     if wrow["mn"] is not None and wrow["mn"] < 1:
         raise ValueError(
             f"weighted_sample(): weights must be ≥ 1 (got min={wrow['mn']});"

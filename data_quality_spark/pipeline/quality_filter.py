@@ -52,7 +52,6 @@ class QFConfig:
     min_stopword_density: float = 0.10
     max_perplexity: float = 26.0
     drop_lang_mismatch: bool = True
-    n_sample_rows: int = 100
     # CCNet-style perplexity terciles: head (cleanest) / middle / tail;
     # annotation-only — downstream training picks buckets, the filter
     # doesn't drop on them
@@ -61,11 +60,6 @@ class QFConfig:
     # optional fastText-style confidence gate: margin below this fires a
     # WARNING rule (None = off, keeping the default rule set stable)
     min_lang_margin: float | None = None
-    # raw `text` is only the extraction fallback input; once text_extracted
-    # is coalesced it is dead weight in every downstream row buffer
-    # (~kB/row × every projection's row materialization). Dropped by
-    # default; set True to carry it through to the annotated output.
-    keep_source_text: bool = False
     # RefinedWeb-style URL filtering: drop rows whose host (or any parent
     # domain) is on this list. None = stage off (default rule set stable).
     # Map-only arrays_overlap against a literal array — no join, no model
@@ -312,21 +306,17 @@ def with_model_scores(df: DataFrame, cfg: QFConfig = DEFAULT_CONFIG) -> DataFram
 HOST_RANK_BROADCAST_MAX_BYTES = 256 << 20
 
 
-def with_host_rank(
-    df: DataFrame, cfg: QFConfig, broadcast: bool | str = "auto"
-) -> DataFrame:
+def with_host_rank(df: DataFrame, cfg: QFConfig) -> DataFrame:
     """Join the persisted crawl-rank prior (ops.graph.host_rank artifact)
     onto the pages frame as a `host_rank` column (NULL = host unknown).
 
-    broadcast='auto' (default) probes the artifact's on-disk footprint
-    (fsio.content_length — one metadata RPC) and adds the broadcast hint
-    only under HOST_RANK_BROADCAST_MAX_BYTES; above it the plan is left to
-    AQE, which still broadcast-converts at runtime if the scanned relation
-    turns out small, and otherwise shuffles — a slow plan instead of a
-    driver/executor OOM abort. broadcast=True forces the hint (caller
-    asserts the table fits the heaps: the pages side must NEVER shuffle
-    for a lookup); False never hints — pre-bucket both sides instead.
-    Stream-safe either way (stream-static join)."""
+    Probes the artifact's on-disk footprint (fsio.content_length — one
+    metadata RPC) and adds the broadcast hint only under
+    HOST_RANK_BROADCAST_MAX_BYTES, so the pages side never shuffles for a
+    lookup; above it the plan is left to AQE, which still
+    broadcast-converts at runtime if the scanned relation turns out small,
+    and otherwise shuffles — a slow plan instead of a driver/executor OOM
+    abort. Stream-safe either way (stream-static join)."""
     from data_quality_spark.ops.textops import host_of
 
     spark = df.sparkSession
@@ -334,23 +324,19 @@ def with_host_rank(
         spark.read.parquet(cfg.host_rank_path)
         .select(F.col("host").alias("__hr_host"), F.col("rank").alias("host_rank"))
     )
-    if broadcast == "auto":
-        nbytes = fsio.content_length(spark, cfg.host_rank_path)
-        broadcast = nbytes <= HOST_RANK_BROADCAST_MAX_BYTES
-        if not broadcast:
-            import warnings
-
-            warnings.warn(
-                f"host-rank artifact at {cfg.host_rank_path} is "
-                f"{nbytes >> 20} MiB on disk — above the "
-                f"{HOST_RANK_BROADCAST_MAX_BYTES >> 20} MiB auto-broadcast "
-                "ceiling; leaving the join strategy to AQE. Pass "
-                "broadcast=True to force the hint if your executors are "
-                "sized for it.",
-                stacklevel=2,
-            )
-    if broadcast:
+    nbytes = fsio.content_length(spark, cfg.host_rank_path)
+    if nbytes <= HOST_RANK_BROADCAST_MAX_BYTES:
         ranks = F.broadcast(ranks)
+    else:
+        import warnings
+
+        warnings.warn(
+            f"host-rank artifact at {cfg.host_rank_path} is "
+            f"{nbytes >> 20} MiB on disk — above the "
+            f"{HOST_RANK_BROADCAST_MAX_BYTES >> 20} MiB auto-broadcast "
+            "ceiling; leaving the join strategy to AQE.",
+            stacklevel=2,
+        )
     return (
         df.withColumn("__hr_host", host_of(F.col("url")))
         .join(ranks, "__hr_host", "left")
@@ -358,36 +344,29 @@ def with_host_rank(
     )
 
 
-def annotate_pages(
-    df: DataFrame, cfg: QFConfig = DEFAULT_CONFIG, min_parallelism: int | None = 0
-) -> DataFrame:
+def annotate_pages(df: DataFrame, cfg: QFConfig = DEFAULT_CONFIG) -> DataFrame:
     """Full per-row annotation: extraction, features, model scores, rules,
     scrubbed text, keep flag, lineage columns.
 
-    min_parallelism: repartition by url-hash when the input has fewer
-    partitions (local parquet fixtures arrive as a handful of splits; the
-    UDF/feature stages would serialize). 0/None = auto (2× default
-    parallelism); pass -1 to disable. On a real cluster the file splits
-    already provide parallelism and the url-hash salting also breaks up
-    pathological host clustering in the input order.
+    An input with fewer partitions than the default parallelism is
+    repartitioned by url-hash (local parquet fixtures arrive as a handful
+    of splits; the UDF/feature stages would serialize). On a real cluster
+    the file splits already provide parallelism; the url-hash salting also
+    breaks up pathological host clustering in the input order.
     """
-    if min_parallelism is None:
-        min_parallelism = 0  # documented: None means auto, same as 0
     # lineage: capture the source split BEFORE any exchange (input_file_name
     # is empty once rows cross a shuffle) — north_rule's per-partition
     # lineage: every output row is traceable to (src_file, part_id).
     if "src_file" not in df.columns:
         df = df.withColumn("src_file", F.input_file_name())
-    if min_parallelism is not None and min_parallelism >= 0:
-        target = min_parallelism or df.sparkSession.sparkContext.defaultParallelism
-        from data_quality_spark.ops.util import num_partitions
+    from data_quality_spark.ops.util import num_partitions
 
-        if num_partitions(df) < target:
-            # spread narrow inputs across the cluster; the url-hash also
-            # breaks up pathological host clustering. When the input already
-            # has >= cores splits this exchange is pure overhead (it would
-            # move the full html payload) — skip it.
-            df = df.repartition(2 * target, F.xxhash64("url"))
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if num_partitions(df) < target:
+        # spread narrow inputs across the cluster. When the input already
+        # has >= cores splits this exchange is pure overhead (it would
+        # move the full html payload) — skip it.
+        df = df.repartition(2 * target, F.xxhash64("url"))
     # dup-url keys from the raw input: a column-pruned url-only scan +
     # count>1 aggregate, broadcast-joined back (AQE) — the wide frame and
     # the expensive downstream stages are never re-evaluated for this.
@@ -421,12 +400,10 @@ def annotate_rowwise(df: DataFrame, cfg: QFConfig, rules) -> DataFrame:
         df = df.withColumn(
             "noindex_found", extract.native_noindex(F.col("html"))
         )
-    # html (and by default the raw text fallback) served their purpose —
-    # dropping the payload columns here keeps them out of every downstream
-    # stage's row buffers (measured ~6% of 8-core pipeline time for text)
-    df = df.drop("html")
-    if not cfg.keep_source_text:
-        df = df.drop("text")
+    # html and the raw text fallback served their purpose — dropping the
+    # payload columns here keeps them out of every downstream stage's row
+    # buffers (measured ~6% of 8-core pipeline time for text)
+    df = df.drop("html", "text")
     df = textstats.with_features(df, "text_extracted")
     df = with_model_scores(df, cfg)
     # CCNet-style quality bucket by LM perplexity (head = cleanest tercile);
@@ -453,21 +430,27 @@ def annotate_rowwise(df: DataFrame, cfg: QFConfig, rules) -> DataFrame:
     return df.withColumn("part_id", F.spark_partition_id())
 
 
+def rule_hit_aggs(rules: list[Rule]) -> list:
+    """Row count, drop count and one per-rule hit count (sum of
+    array_contains over the fired array) — the aggregate list shared by the
+    batch metrics table and its streaming twin."""
+    return [F.count(F.lit(1)).alias("n_rows"),
+            F.sum((~F.col("keep")).cast("long")).alias("n_dropped")] + [
+        F.sum(F.array_contains("fired_rules", r.rule_id).cast("long")).alias(r.rule_id)
+        for r in rules
+    ]
+
+
 def metrics_by_partition(
     ann: DataFrame,
     cfg: QFConfig = DEFAULT_CONFIG,
     group_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Per-(partition, rule) hit counts in one explode-free agg: sums of
-    array_contains over the fired array. Map-side partial agg → tiny shuffle.
+    """Per-(partition, rule) hit counts in one explode-free agg (see
+    rule_hit_aggs). Map-side partial agg → tiny shuffle.
     group_cols extends the grouping (e.g. ["bucket", "part_id"] so the
     resumable runner can write metrics partitioned by checkpoint bucket)."""
-    rules = quality_rules(cfg)
-    aggs = [F.count(F.lit(1)).alias("n_rows"),
-            F.sum((~F.col("keep")).cast("long")).alias("n_dropped")] + [
-        F.sum(F.array_contains("fired_rules", r.rule_id).cast("long")).alias(r.rule_id)
-        for r in rules
-    ]
+    aggs = rule_hit_aggs(quality_rules(cfg))
     if "src_file" in ann.columns:
         aggs.append(F.collect_set("src_file").alias("src_files"))
     return ann.groupBy(*(group_cols or ["part_id"])).agg(*aggs)

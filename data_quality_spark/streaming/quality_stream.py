@@ -36,6 +36,7 @@ from data_quality_spark.pipeline.quality_filter import (
     QFConfig,
     annotate_rowwise,
     quality_rules,
+    rule_hit_aggs,
 )
 
 PAGES_SCHEMA = (
@@ -322,16 +323,10 @@ def stream_rule_metrics(
     Returns the unstarted aggregated stream (caller picks the sink)."""
     src = spark.readStream.schema(PAGES_SCHEMA).parquet(in_path)
     ann = annotate_stream(src, cfg)
-    rules = streaming_rules(cfg)
-    aggs = [F.count(F.lit(1)).alias("n_rows"),
-            F.sum((~F.col("keep")).cast("long")).alias("n_dropped")] + [
-        F.sum(F.array_contains("fired_rules", r.rule_id).cast("long")).alias(r.rule_id)
-        for r in rules
-    ]
     return (
         ann.withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("w"))
-        .agg(*aggs)
+        .agg(*rule_hit_aggs(streaming_rules(cfg)))
     )
 
 

@@ -34,22 +34,16 @@ def test_portable_hash_matches_python(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_word_shingles(spark):
-    df = spark.createDataFrame(
-        [("a b c d",), ("a b",), ("",), ("x  y \t z",)], "text string"
-    )
-    out = [r["sh"] for r in df.select(
-        D.word_shingles(F.col("text")).alias("sh")).collect()]
+def test_word_shingles():
+    out = [D.py_shingles(t) for t in ["a b c d", "a b", "", "x  y \t z"]]
     assert out[0] == ["a b c", "b c d"]
     assert out[1] == []  # fewer than n words
     assert out[2] == []
     assert out[3] == ["x y z"]  # whitespace runs collapse
 
 
-def test_word_shingles_distinct(spark):
-    df = spark.createDataFrame([("a b a b a b a",)], "text string")
-    out = df.select(D.word_shingles(F.col("text")).alias("sh")).collect()[0]["sh"]
-    assert sorted(out) == ["a b a", "b a b"]
+def test_word_shingles_distinct():
+    assert D.py_shingles("a b a b a b a") == ["a b a", "b a b"]
 
 
 # ---------------------------------------------------------------------------
@@ -523,40 +517,50 @@ def test_media_meta_native_agrees_with_pandas_path(spark):
         assert native[k]["n_bytes"] == pandas_path[k]["n_bytes"]
 
 
-def test_sample_frames_udf_matches_native(spark):
-    """1→N frame sampling: Arrow mapInPandas path == Catalyst
-    sequence+explode twin, including empty and multi-frame payloads."""
+def test_sample_frames_hand_computed(spark):
+    """1→N frame sampling: every every_n-th 256-char window of the decoded
+    payload becomes one (media_id, frame_idx, n_chars, frame_md5) row —
+    including the short last window, multibyte text (windows count chars,
+    not bytes) and an empty payload (no frames)."""
+    import hashlib
+
     docs = spark.createDataFrame(
-        [(1, "x" * 700), (2, "short"), (3, "y" * 256), (4, None)],
+        [(1, "x" * 700), (2, "short"), (3, "y" * 256), (4, None), (5, ""),
+         (6, "é" * 300)],
         "doc_id long, text string",
     )
     media = M.synthesize_media(docs, "doc_id", "text")
-    udf = sorted(
-        map(tuple, M.sample_frames(media, every_n=2).collect())
-    )
-    native = sorted(
-        map(tuple, M.sample_frames(media, every_n=2, strategy="native").collect())
-    )
-    assert udf == native and len(udf) > 0
+    got = sorted(map(tuple, M.sample_frames(media, every_n=2).collect()))
+
+    def md5(t):
+        return hashlib.md5(t.encode("utf-8")).hexdigest()
+
     # 700 chars → frames 0,1,2 → sampled 0,2; frame 2 has 700-512=188 chars
-    by_doc = [(r for r in udf if r[0] == 1)]
-    f1 = [r for r in udf if r[0] == 1]
-    assert [(r[1], r[2]) for r in f1] == [(0, 256), (2, 188)]
+    assert got == [
+        (1, 0, 256, md5("x" * 256)),
+        (1, 2, 188, md5("x" * 188)),
+        (2, 0, 5, md5("short")),
+        (3, 0, 256, md5("y" * 256)),
+        (6, 0, 256, md5("é" * 256)),
+    ]
 
 
-def test_resize_media_udf_matches_native(spark):
+def test_resize_media_hand_computed(spark):
+    """The resample stub truncates the decoded payload to w·h/16 chars
+    (chars, not bytes) and stamps the target size; format passes through."""
     docs = spark.createDataFrame(
-        [(1, "z" * 500), (2, "tiny")], "doc_id long, text string"
+        [(1, "z" * 500), (2, "tiny"), (3, "é" * 100)], "doc_id long, text string"
     )
     media = M.synthesize_media(docs, "doc_id", "text")
-    udf = {r["media_id"]: r for r in M.resize_media(media, 32, 32).collect()}
-    nat = {r["media_id"]: r
-           for r in M.resize_media(media, 32, 32, strategy="native").collect()}
-    assert set(udf) == set(nat)
-    for k in udf:
-        assert bytes(udf[k]["payload"]) == bytes(nat[k]["payload"])
-        assert udf[k]["width"] == 32 and udf[k]["height"] == 32
-    assert len(bytes(udf[1]["payload"])) == (32 * 32) // 16  # budget-capped
+    got = {r["media_id"]: (bytes(r["payload"]), r["width"], r["height"],
+                           r["format"])
+           for r in M.resize_media(media, 32, 32).collect()}
+    # budget = 32·32 // 16 = 64 chars; format cycles png/jpeg/wav by id % 3
+    assert got == {
+        1: (b"z" * 64, 32, 32, "jpeg"),
+        2: (b"tiny", 32, 32, "wav"),
+        3: (("é" * 64).encode("utf-8"), 32, 32, "png"),
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -717,26 +721,26 @@ def test_ivf_topk_probes_nearest_cell(spark):
     assert ids == [1, 2, 3]
 
 
-def test_assign_cells_udf_matches_native_expr(spark, sf_dir):
-    """The Arrow assignment UDF and the Catalyst fold expression must agree
-    on every vector (same rounded cosines, same tie resolution)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cents = S.train_kmeans_cells(emb, "vec_id", "v", 4, 1)
-    native = {
-        r["vec_id"]: r["c"]
-        for r in emb.select(
-            "vec_id", S.assign_cells(F.col("v"), cents, "native").alias("c")
-        ).collect()
-    }
-    udf = {
-        r["vec_id"]: r["c"]
-        for r in emb.select(
-            "vec_id", S.assign_cells(F.col("v"), cents, "udf").alias("c")
-        ).collect()
-    }
-    assert len(native) > 0 and native == udf
+def test_assign_cells_hand_computed(spark):
+    """argmax cosine over the centroids, with the cosine rounded to 6dp
+    before the argmax: exact and near ties (equal after rounding) take the
+    lowest cell, a real difference does not, and NULL or zero-norm vectors
+    score 0.0 everywhere → cell 0."""
+    cents = [[1.0, 0.0], [0.0, 1.0], [-1.0, -1.0]]
+    rows = [
+        (1, [2.0, 0.1]),         # cos 0.998752 / 0.049938 / -0.741661
+        (2, [0.0, 3.0]),         # cell 1 outright
+        (3, [-1.0, -2.0]),       # cos 0.948683 to cell 2
+        (4, [1.0, 1.0]),         # exact tie 0.707107 between cells 0 and 1
+        (5, [1.0, 1.0 + 1e-9]),  # differs past the 6th decimal → tie → 0
+        (6, [1.0, 1.001]),       # 0.706753 vs 0.707460 → cell 1
+        (7, [0.0, 0.0]),         # zero norm
+        (8, None),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    got = {r["vec_id"]: r["c"] for r in df.select(
+        "vec_id", S.assign_cells(F.col("v"), cents).alias("c")).collect()}
+    assert got == {1: 0, 2: 1, 3: 2, 4: 0, 5: 0, 6: 1, 7: 0, 8: 0}
 
 
 def test_train_kmeans_matches_python_twin(spark, sf_dir):
@@ -1408,7 +1412,9 @@ def test_canonicalize_url(spark):
         assert got[i] == exp, (raw, got[i], exp)
 
 
-def test_remove_boilerplate_both_strategies(spark):
+def test_remove_boilerplate_both_strategies(spark, monkeypatch):
+    # both rewrite paths: the broadcast-set Arrow UDF, and the shuffle
+    # anti-join that a set over BOILER_MAX_BROADCAST (forced to 0) takes.
     # BANNER appears in 4 docs (>= min_docs=3), SEMI in 2 (< 3, kept);
     # doc 4 is ALL boilerplate -> ''; doc 5 NULL -> NULL; blank lines kept
     # (min_line_chars=1 means '' is never boilerplate even though shared).
@@ -1430,18 +1436,26 @@ def test_remove_boilerplate_both_strategies(spark):
         4: "",
         5: None,
     }
-    for strategy in ("broadcast", "join"):
+    for cap in (T.BOILER_MAX_BROADCAST, 0):
+        monkeypatch.setattr(T, "BOILER_MAX_BROADCAST", cap)
         got = {r["i"]: r["text_clean"] for r in T.remove_boilerplate(
-            df, "i", "t", 3, strategy=strategy).collect()}
-        assert got == expected, strategy
+            df, "i", "t", 3).collect()}
+        assert got == expected, cap
 
 
-def test_remove_boilerplate_broadcast_cap(spark):
-    # every line is shared by both docs -> 2 boilerplate lines > cap of 1
+def test_remove_boilerplate_broadcast_cap(spark, monkeypatch):
+    # x and y are each shared by 3 docs -> 2 boilerplate lines > cap of 1:
+    # the set is not shipped, the anti-join path strips it instead
+    monkeypatch.setattr(T, "BOILER_MAX_BROADCAST", 1)
     df = spark.createDataFrame(
-        [(1, "x\ny"), (2, "x\ny")], "i int, t string")
-    with pytest.raises(ValueError, match="max_broadcast"):
-        T.remove_boilerplate(df, "i", "t", 2, max_broadcast=1)
+        [(1, "x\ny\nkeep one"), (2, "x\ny"), (3, "y\nkeep three\nx"),
+         (4, None)],
+        "i int, t string")
+    out = T.remove_boilerplate(df, "i", "t", 2)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan  # no broadcast-set UDF
+    got = {r["i"]: r["text_clean"] for r in out.collect()}
+    assert got == {1: "keep one", 2: "", 3: "keep three", 4: None}
 
 
 def test_dup_span_stats(spark):
@@ -1755,19 +1769,28 @@ def test_dsir_weights_shift_toward_target(spark):
     assert out[3]["dsir_logw"] < out[4]["dsir_logw"] < out[1]["dsir_logw"]
 
 
-def test_cosine_pairs_udf_matches_native(spark):
-    import random
-
-    rng = random.Random(7)
+def test_cosine_pairs_hand_computed(spark):
+    """Per-block pairs (id_a < id_b) with the 6dp-rounded cosine; a ragged
+    pair has no dot product and is dropped, NULL and zero-norm vectors
+    score 0.0, and vectors in different blocks never pair."""
     rows = [
-        (i, i % 3, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(40)
-    ] + [(100, 0, None)]
+        (1, 0, [1.0, 0.0]),
+        (2, 0, [1.0, 1.0]),
+        (3, 0, [0.0, 1.0]),
+        (4, 0, [3.0, 4.0]),
+        (6, 0, [1.0, 0.0, 0.0]),  # ragged against every other block-0 row
+        (7, 1, [0.0, 0.0]),
+        (8, 1, [2.0, 0.0]),
+        (9, 1, None),
+    ]
     df = spark.createDataFrame(rows, "vec_id int, blk int, v array<double>")
-    a = S.cosine_pairs(df, "vec_id", "v", ["blk"], -1.0, strategy="udf")
-    b = S.cosine_pairs(df, "vec_id", "v", ["blk"], -1.0, strategy="native")
-    ra = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in a.collect()}
-    rb = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in b.collect()}
-    assert ra == rb and len(ra) > 100
+    got = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in
+           S.cosine_pairs(df, "vec_id", "v", ["blk"], -1.0).collect()}
+    assert got == {
+        (1, 2): 0.707107, (1, 3): 0.0, (1, 4): 0.6,
+        (2, 3): 0.707107, (2, 4): 0.989949, (3, 4): 0.8,
+        (7, 8): 0.0, (7, 9): 0.0, (8, 9): 0.0,
+    }
 
 
 def test_url_blocklist_filter_literal_and_df(spark):
@@ -3240,6 +3263,35 @@ def test_hits_checkpoint_parity_and_guards(spark):
         G.HITS_MAX_DEG = orig
 
 
+def test_hits_edge_hygiene_matches_sql_twin(spark):
+    """hits() applies the same edge hygiene as edges_from_pages: NULL and
+    '' hosts and self-loops never reach the recurrence. A self-loop would
+    feed a host's hub score into its own authority, and '' would surface
+    as a phantom host. The DuckDB twin filters the same edges, so both
+    engines agree exactly on the raw edge set."""
+    import duckdb
+    import pandas as pd
+
+    from data_quality_spark.ops import graph as G
+
+    clean = [("a.example", "b.example"), ("a.example", "c.example"),
+             ("b.example", "c.example"), ("c.example", "a.example")]
+    raw = clean + [("b.example", "b.example"), ("", "c.example"),
+                   ("a.example", ""), (None, "b.example")]
+    df = spark.createDataFrame(raw, "src string, dst string")
+    got = {r["host"]: (r["auth_units"], r["hub_units"])
+           for r in G.hits(df, iters=4).collect()}
+    assert "" not in got and None not in got
+    auth, hub = _py_hits(clean, 4)
+    assert got == {h: (auth[h], hub[h]) for h in auth}
+
+    con = duckdb.connect()
+    con.register("raw_edges", pd.DataFrame(raw, columns=["src", "dst"]))
+    ora = {r[0]: (r[1], r[2]) for r in con.execute(
+        G.sql_hits("SELECT src, dst FROM raw_edges", iters=4)).fetchall()}
+    assert ora == got
+
+
 def test_degree_stats(spark):
     """Distinct-edge contract (duplicate edges count once), zero-fill for
     one-sided hosts, and the dangling host shows out_deg = 0."""
@@ -3281,8 +3333,8 @@ def test_readability_python_twin_and_bands(spark):
 
 
 def test_weighted_sample_determinism_and_bias(spark):
-    """Same input → identical sample under any partitioning; zero weights
-    raise; heavier rows are sampled proportionally more often (the
+    """Same input → identical sample under any partitioning; zero and NULL
+    weights raise; heavier rows are sampled proportionally more often (the
     priority-sampling contract) — with 10× weight on even ids, evens must
     dominate the sample."""
     import pytest as _pytest
@@ -3302,6 +3354,12 @@ def test_weighted_sample_determinism_and_bias(spark):
     with _pytest.raises(ValueError, match="weights must be"):
         T.weighted_sample(
             spark.createDataFrame([(1, 0)], "id long, w long"),
+            "id", "w", k=1)
+    # NULL weights raise too: min() skips them, and a NULL priority sorts
+    # first in Spark but last in DuckDB
+    with _pytest.raises(ValueError, match="NULL"):
+        T.weighted_sample(
+            spark.createDataFrame([(1, 5), (2, None)], "id long, w long"),
             "id", "w", k=1)
 
 

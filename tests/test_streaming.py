@@ -35,9 +35,7 @@ def test_stream_matches_batch(spark, stream_in, tmp_path):
 
     got = spark.read.parquet(out)
     # batch twin WITHOUT the dup-url rule (stream has no cross-row state)
-    batch = annotate_pages(
-        spark.read.parquet(stream_in).drop("fault_class"), min_parallelism=-1
-    )
+    batch = annotate_pages(spark.read.parquet(stream_in).drop("fault_class"))
     # recompute keep excluding duplicate_url (stream has no cross-row state)
     rules = [r.rule_id for r in streaming_rules() if r.severity == "fail"]
     batch_keep = batch.withColumn(
@@ -330,8 +328,7 @@ def test_stream_clf_stage_matches_batch(spark, stream_in, tmp_path):
     got_urls = {r["url"] for r in spark.read.parquet(out).select("url").collect()}
 
     batch = annotate_pages(
-        spark.read.parquet(stream_in).drop("fault_class"), cfg,
-        min_parallelism=-1,
+        spark.read.parquet(stream_in).drop("fault_class"), cfg
     )
     rules = [r.rule_id for r in streaming_rules(cfg) if r.severity == "fail"]
     assert "clf_low_quality" in rules
